@@ -1,7 +1,7 @@
 """Arrow/numpy twin of the MinHash signature expression pipeline.
 
-Round-9 stage decomposition (``tools/diag_minhash_funnel.py sigdecomp``,
-500k docs, 32 hashes): the expression pipeline's wall is ~97%
+Round-9 stage decomposition (500k docs, 32 hashes; BASELINE.md
+"Round-9 measurements"): the expression pipeline's wall is ~97%
 interpreted higher-order lambdas — the ``transform(sequence, substr)``
 shingle generator alone costs 34.6 s against a 1.0 s scan, and the 32
 ``array_min(transform(...))`` permutation minima cost several times

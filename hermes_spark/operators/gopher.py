@@ -65,11 +65,11 @@ BULLET_PREFIXES = ("- ", "* ", "•")
 
 
 def _make_kernel_tokenizer(script_aware: bool):
-    """Tokenizer shared by BOTH repetition-kernel engines (hoisted in
-    r12 so the script-aware switch cannot drift between them): Spark's
-    trim-then-\s+ split, with unsegmented-script docs (ratio >=
-    SCRIPT_MIN_RATIO, mirroring the gates' switch) char-tokenized
-    first under ``script_aware``."""
+    r"""Tokenizer shared by the repetition kernel and its reference twin
+    in ``tests/engine_oracles.py`` (hoisted in r12 so the script-aware
+    switch cannot drift between them): Spark's trim-then-\s+ split,
+    with unsegmented-script docs (ratio >= SCRIPT_MIN_RATIO, mirroring
+    the gates' switch) char-tokenized first under ``script_aware``."""
     import re as _re
 
     ws = _re.compile(r"\s+", _re.ASCII)
@@ -437,7 +437,6 @@ def gopher_repetition_flags(
     max_dup_para_char_frac: float = 0.20,
     top_ngram_max: "dict[int, float] | None" = None,
     dup_ngram_max: "dict[int, float] | None" = None,
-    engine: str = "counter",
     script_aware: bool = False,
 ) -> DataFrame:
     r"""Gopher repetition-rule metrics + the overall ``keep`` flag.
@@ -478,55 +477,42 @@ def gopher_repetition_flags(
     the top/dup-gram rules instead of the whole page collapsing to ~1
     token with repetition 0.  Line/paragraph rules are unchanged
     (line-based).  Latin documents tokenize identically either way
-    (screened in the kernel with one regex search).  Both engines
-    implement the same switch (property-tested equal).
+    (screened in the kernel with one regex search).
 
     Scale shape: an Arrow-batched ``mapInPandas`` kernel computes the
     EXACT INTEGER quantities per document (Counter over token tuples —
-    linear in gram count), and the fractions + 6-dp rounding happen
-    JVM-side from those integers, so the float semantics are identical
-    to every other gate and to the DuckDB oracle. Zero shuffle. Two
+    linear in gram count, see :func:`_counter_stats`), and the
+    fractions + 6-dp rounding happen JVM-side from those integers, so
+    the float semantics are identical to every other gate and to the
+    DuckDB oracle. Zero shuffle. Two
     pure-Spark formulations were measured and rejected on 1M docs: the
     (id, n, gram) explode + count shuffle ships ~|ns| x token-stream
     gram STRINGS (~20 GB, 495 s), and an in-row sorted-array adjacency
     scan is lambda-bound (Spark higher-order functions run interpreted,
     ~310 ns per element-lambda — minutes for ~5 x 10^9 invocations);
     the Arrow kernel does the same counting at Python-dict speed on
-    bounded per-batch memory."""
-    if top_ngram_max is None:
-        top_ngram_max = dict(GOPHER_TOP_NGRAM_MAX)
-    if dup_ngram_max is None:
-        dup_ngram_max = dict(GOPHER_DUP_NGRAM_MAX)
+    bounded per-batch memory.  A batch-vectorized numpy twin of the
+    kernel (measured slower, BASELINE.md r8) is kept as the
+    cross-checking reference in ``tests/engine_oracles.py``."""
+    return _repetition_flags(
+        df,
+        id_col,
+        text_col,
+        max_dup_line_frac=max_dup_line_frac,
+        max_dup_line_char_frac=max_dup_line_char_frac,
+        max_dup_para_frac=max_dup_para_frac,
+        max_dup_para_char_frac=max_dup_para_char_frac,
+        top_ngram_max=top_ngram_max,
+        dup_ngram_max=dup_ngram_max,
+        script_aware=script_aware,
+        stats_kernel=_counter_stats,
+    )
 
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    top_ns = sorted(top_ngram_max)
-    dup_ns = sorted(dup_ngram_max)
-    all_ns = sorted(set(top_ns) | set(dup_ns))
-    top_set, dup_set = set(top_ns), set(dup_ns)
-
-    fields = [
-        StructField("__id", df.schema[id_col].dataType),
-        StructField("__tok_chars", LongType()),
-    ]
-    for fam in ("l", "p"):
-        fields += [
-            StructField(f"__{fam}_tot", LongType()),
-            StructField(f"__{fam}_uniq", LongType()),
-            StructField(f"__{fam}_chars_all", LongType()),
-            StructField(f"__{fam}_chars_dup", LongType()),
-        ]
-    fields += [StructField(f"__top{n}", LongType()) for n in top_ns]
-    fields += [StructField(f"__dup{n}", LongType()) for n in dup_ns]
-    schema = StructType(fields)
-    # large-but-narrow inputs (AQE-coalesced intermediate writes)
-    # starve this CPU-bound kernel — stats-gated widen, no-op on test
-    # frames and wide scans (the zero-shuffle plan contract holds for
-    # every well-partitioned input; see plans.rebalance_for_cpu)
-    from ..plans import rebalance_for_cpu
-
-    df = rebalance_for_cpu(df)
-    src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
+def _counter_stats(names, top_ns, dup_ns, script_aware):
+    """The repetition stats kernel for ``mapInPandas``: per document, the
+    exact integer quantities behind every rule (output columns
+    ``names``), counted with adaptive per-doc ``Counter`` passes."""
 
     def stats(batches):
         import re as _re
@@ -552,7 +538,7 @@ def gopher_repetition_flags(
             return len(items), len(c), chars_all, chars_dup
 
         for b in batches:
-            out = {f.name: [] for f in fields}
+            out = {name: [] for name in names}
             for id_, t in zip(b["__id"], b["__t"]):
                 t = "" if t is None else str(t)
                 toks = tokenize(t)
@@ -649,190 +635,66 @@ def gopher_repetition_flags(
                     out[f"__dup{n}"].append(dup)
             yield pd.DataFrame(out)
 
-    def stats_vector(batches):
-        """Batch-vectorized twin of ``stats`` (property-tested
-        bit-identical): tokenization and the small line/paragraph
-        counters stay per-doc Python; gram counting runs batch-wide in
-        numpy via dense length-doubling gram ids + one plain-int64
-        np.unique per n.  MEASURED SLOWER than the adaptive Counter
-        engine on the 1M-doc Zipf probe (40.2 s vs 21.4 s before the
-        counter fast paths; see BASELINE.md r8): the top-gram tie-break
-        (min JOINED STRING among max-count grams) degenerates when no
-        gram repeats — every gram ties, so the string argmin falls back
-        to Python for nearly every doc, erasing the numpy win.  Kept as
-        the cross-checking reference/second implementation; ``counter``
-        is the default."""
-        import re as _re
-        from collections import Counter
+    return stats
 
-        import numpy as np
-        import pandas as pd
 
-        para_re = _re.compile(r"\n\s*\n", _re.ASCII)
-        _WS = " \t\n\r\x0b\x0c"
-        tokenize = _make_kernel_tokenizer(script_aware)
+def _repetition_flags(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    *,
+    max_dup_line_frac: float,
+    max_dup_line_char_frac: float,
+    max_dup_para_frac: float,
+    max_dup_para_char_frac: float,
+    top_ngram_max: "dict[int, float] | None",
+    dup_ngram_max: "dict[int, float] | None",
+    script_aware: bool,
+    stats_kernel,
+) -> DataFrame:
+    """:func:`gopher_repetition_flags` with the stats kernel passed in.
 
-        def group_stats(items):
-            c = Counter(items)
-            chars_all = sum(len(g) * k for g, k in c.items())
-            chars_dup = sum(len(g) * k for g, k in c.items() if k >= 2)
-            return len(items), len(c), chars_all, chars_dup
+    ``stats_kernel(names, top_ns, dup_ns, script_aware)`` returns the
+    ``mapInPandas`` function emitting the integer columns ``names``;
+    the public operator passes :func:`_counter_stats`, and the test
+    oracle (``tests/engine_oracles.py``) substitutes its reference
+    kernel through this one seam."""
+    if top_ngram_max is None:
+        top_ngram_max = dict(GOPHER_TOP_NGRAM_MAX)
+    if dup_ngram_max is None:
+        dup_ngram_max = dict(GOPHER_DUP_NGRAM_MAX)
 
-        for b in batches:
-            ndocs = len(b)
-            if ndocs == 0:
-                continue
-            out = {f.name: [] for f in fields}
-            vocab: dict = {}
-            ids_parts, len_parts = [], []
-            doc_nt = np.empty(ndocs, dtype=np.int64)
-            for r, (id_, t) in enumerate(zip(b["__id"], b["__t"])):
-                t = "" if t is None else str(t)
-                toks = tokenize(t)
-                lines = [
-                    l2 for l2 in (l.strip(_WS) for l in t.split("\n"))
-                    if l2 != ""
-                ]
-                paras = [
-                    p2 for p2 in (p.strip(_WS) for p in para_re.split(t))
-                    if p2 != ""
-                ]
-                out["__id"].append(id_)
-                tok_chars = sum(len(w) for w in toks)
-                if toks:
-                    tok_chars += len(toks) - 1
-                out["__tok_chars"].append(tok_chars)
-                for fam, items in (("l", lines), ("p", paras)):
-                    tot, uniq, call, cdup = group_stats(items)
-                    out[f"__{fam}_tot"].append(tot)
-                    out[f"__{fam}_uniq"].append(uniq)
-                    out[f"__{fam}_chars_all"].append(call)
-                    out[f"__{fam}_chars_dup"].append(cdup)
-                doc_nt[r] = len(toks)
-                ids_parts.append(
-                    np.fromiter(
-                        (vocab.setdefault(w, len(vocab)) for w in toks),
-                        dtype=np.int64,
-                        count=len(toks),
-                    )
-                )
-                len_parts.append(
-                    np.fromiter(
-                        (len(w) for w in toks), dtype=np.int64, count=len(toks)
-                    )
-                )
-            flat = (
-                np.concatenate(ids_parts)
-                if ids_parts
-                else np.empty(0, dtype=np.int64)
-            )
-            tlens = (
-                np.concatenate(len_parts)
-                if len_parts
-                else np.empty(0, dtype=np.int64)
-            )
-            doc_of = np.repeat(np.arange(ndocs, dtype=np.int64), doc_nt)
-            cs = np.concatenate(([0], np.cumsum(tlens)))
-            id2tok = list(vocab)  # insertion order == id order
-            total = len(flat)
+    from pyspark.sql.types import LongType, StructField, StructType
 
-            topvals = {n: np.zeros(ndocs, dtype=np.int64) for n in top_ns}
-            dupvals = {n: np.zeros(ndocs, dtype=np.int64) for n in dup_ns}
-            # Dense gram ids by length-doubling: lid[L][i] identifies the
-            # L-token window starting at flat position i (ids equal ⟺
-            # windows equal, within the batch).  Each level is ONE plain
-            # int64 np.unique over (left_id << 31 | right_id) — measured
-            # ~17x faster than a structured-dtype unique over the raw
-            # (doc, id×n) rows, which in turn lost to the per-doc Counter
-            # path (the r8 first cut, 168 s vs 25 s per 1M docs — both
-            # probed; see BASELINE.md).  Cross-doc windows get ids too
-            # but are never selected: a fully-in-doc window's halves are
-            # in-doc by containment.  Dense ids and doc indexes are both
-            # < 2^31, so every packed key fits int64.
-            lid = {1: flat}
+    top_ns = sorted(top_ngram_max)
+    dup_ns = sorted(dup_ngram_max)
 
-            def _level(L: int):
-                got = lid.get(L)
-                if got is not None:
-                    return got
-                a_len = L // 2
-                b_len = L - a_len
-                a, b = _level(a_len), _level(b_len)
-                m = total - L + 1
-                if m <= 0:
-                    lid[L] = np.empty(0, dtype=np.int64)
-                    return lid[L]
-                key = (a[:m] << 31) | b[a_len : a_len + m]
-                _, inv = np.unique(key, return_inverse=True)
-                lid[L] = inv.astype(np.int64, copy=False)
-                return lid[L]
+    fields = [
+        StructField("__id", df.schema[id_col].dataType),
+        StructField("__tok_chars", LongType()),
+    ]
+    for fam in ("l", "p"):
+        fields += [
+            StructField(f"__{fam}_tot", LongType()),
+            StructField(f"__{fam}_uniq", LongType()),
+            StructField(f"__{fam}_chars_all", LongType()),
+            StructField(f"__{fam}_chars_dup", LongType()),
+        ]
+    fields += [StructField(f"__top{n}", LongType()) for n in top_ns]
+    fields += [StructField(f"__dup{n}", LongType()) for n in dup_ns]
+    schema = StructType(fields)
+    # large-but-narrow inputs (AQE-coalesced intermediate writes)
+    # starve this CPU-bound kernel — stats-gated widen, no-op on test
+    # frames and wide scans (the zero-shuffle plan contract holds for
+    # every well-partitioned input; see plans.rebalance_for_cpu)
+    from ..plans import rebalance_for_cpu
 
-            for n in all_ns:
-                if total < n:
-                    continue
-                starts = np.nonzero(doc_of[: total - n + 1] == doc_of[n - 1 :])[0]
-                if len(starts) == 0:
-                    continue
-                key = (doc_of[starts] << 31) | _level(n)[starts]
-                _, first_idx, counts = np.unique(
-                    key, return_index=True, return_counts=True
-                )
-                s_u = starts[first_idx]
-                docs_u = doc_of[s_u]
-                charlen = cs[s_u + n] - cs[s_u] + (n - 1)
-                if n in dup_set:
-                    mask = counts >= 2
-                    if mask.any():
-                        dv = dupvals[n]
-                        np.add.at(dv, docs_u[mask], charlen[mask] * counts[mask])
-                if n in top_set:
-                    best = np.zeros(ndocs, dtype=np.int64)
-                    np.maximum.at(best, docs_u, counts)
-                    tie = counts == best[docs_u]
-                    td, tl = docs_u[tie], charlen[tie]
-                    mn = np.full(ndocs, np.iinfo(np.int64).max, dtype=np.int64)
-                    mx = np.zeros(ndocs, dtype=np.int64)
-                    np.minimum.at(mn, td, tl)
-                    np.maximum.at(mx, td, tl)
-                    have = best > 0
-                    tv = topvals[n]
-                    clear = have & (mn == mx)  # ties agree on char length
-                    tv[clear] = best[clear] * mn[clear]
-                    amb = np.nonzero(have & (mn != mx))[0]
-                    if len(amb):
-                        # rare: max-count grams of one doc differ in
-                        # length — resolve the min-JOINED-STRING
-                        # tie-break exactly, reconstructing only those
-                        # docs' tied grams
-                        amb_set = set(amb.tolist())
-                        rows_idx = np.nonzero(tie)[0]
-                        cand: dict = {}
-                        for ri in rows_idx:
-                            d = int(docs_u[ri])
-                            if d not in amb_set:
-                                continue
-                            s = int(s_u[ri])
-                            g = " ".join(
-                                id2tok[int(x)] for x in flat[s : s + n]
-                            )
-                            prev = cand.get(d)
-                            if prev is None or g < prev:
-                                cand[d] = g
-                        for d, g in cand.items():
-                            tv[d] = int(best[d]) * len(g)
-            for n in top_ns:
-                out[f"__top{n}"] = topvals[n]
-            for n in dup_ns:
-                out[f"__dup{n}"] = dupvals[n]
-            yield pd.DataFrame(out)
+    df = rebalance_for_cpu(df)
+    src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
 
-    if engine == "vector":
-        kern = stats_vector
-    elif engine == "counter":
-        kern = stats
-    else:
-        raise ValueError(f"engine must be 'vector' or 'counter', got {engine!r}")
-    pre = src.mapInPandas(kern, schema=schema)
+    pre = src.mapInPandas(
+        stats_kernel(schema.names, top_ns, dup_ns, script_aware), schema=schema
+    )
 
     def _frac(num: str, den: str) -> Column:
         return F.when(F.col(den) <= 0, F.lit(0.0)).otherwise(

@@ -28,12 +28,12 @@ A block is *content* iff::
 
 and the page's ``main_text`` is the kept blocks joined with a newline.
 
-Scale design: pure per-row array/higher-order expressions — ZERO
-shuffle, no UDF, no state.  Higher-order lambdas evaluate interpreted,
-but the per-element unit here is a *block* (tens per page), not a
-character or gram, so the interpreted overhead is negligible next to
-the regex scans, which run in the JVM either way.  At 100 TB this is a
-map-only stage that fuses with the WARC scan.
+Scale design: :func:`page_blocks` / :func:`main_text_column` are pure
+per-row array/higher-order expressions — zero shuffle, no UDF, no
+state — and the SQL oracle mirrors them.  :func:`extract_main_text`
+runs the same segmentation and scoring as a Python-regex Arrow kernel
+(per-block interpreted structs measured ~61 s per 1M pages; see its
+docstring), still a map-only stage with no state.
 
 Reference for the pipeline position: WET extraction in Common-Crawl
 pipelines (the reference repo has no crawl operators; this is part of
@@ -257,7 +257,7 @@ def _py_score_block(p: dict, b: str, need_stop: bool = True):
 
     Substring guards skip regex/replace passes that cannot match
     (``<a`` for anchors, ``<`` for tags, ``&`` for entities) — exact
-    no-ops, pinned by the engine-equivalence fuzz; ``need_stop=False``
+    no-ops, pinned by the kernel-vs-reference fuzz; ``need_stop=False``
     skips the stopword count when the caller's gate ignores it
     (``min_stopword_frac <= 0`` accepts any count >= 0)."""
     if "<a" in b or "<A" in b:
@@ -283,7 +283,8 @@ def _py_page_main(
     min_stopword_frac: float,
 ):
     """(main_text, n_blocks, n_kept, main_words) for one page —
-    mirrors the expression path of :func:`extract_main_text`."""
+    mirrors :func:`page_blocks` plus the keep rule of
+    :func:`main_text_column`."""
     pre = p["script"].sub(" ", html)
     pre = p["style"].sub(" ", pre)
     pre = p["comment"].sub(" ", pre)
@@ -317,7 +318,6 @@ def extract_main_text(
     min_stopword_frac: float = 0.0,
     out_col: str = "main_text",
     keep_columns: Optional[list] = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Main-content extraction over a page frame.
 
@@ -331,68 +331,20 @@ def extract_main_text(
     Compose upstream of the C4/Gopher gates in a WARC pipeline
     (``sources/warc.py`` reads, this extracts, the gates filter).
 
-    ``engine="expr"`` is a zero-shuffle map stage of pure higher-order
-    array expressions — the path the SQL oracle mirrors directly.
-    ``engine="arrow"`` (default) runs the segmentation + scoring in a
-    Python-regex ``mapInPandas`` kernel whose input is widened with
+    The segmentation + scoring runs in a Python-regex ``mapInPandas``
+    kernel, one pass per page batch.  At 1M raw pages the equivalent
+    expression plan (:func:`page_blocks` per-block higher-order
+    structs) cost ~61 s — the interpreted struct construction, not the
+    regex work, dominated — and the kernel does the identical regex
+    work at a fraction of the per-element overhead (same move as
+    sigkernel/LM/weblinks).  Its input is widened with
     ``rebalance_for_cpu`` like every other CPU-bound kernel — on large
     narrow inputs (>=256 MB) that inserts ONE round-robin exchange, so
-    the default path is not literally zero-shuffle; it is pinned to the
-    oracle-checked expression path by the property/fuzz equivalence
-    tests (tests/test_maincontent.py), one hop rather than directly.
+    the stage is not literally zero-shuffle.  The expression plan is
+    the path the SQL oracle mirrors directly; it is kept as the
+    reference in ``tests/engine_oracles.py``, and the property/fuzz
+    equivalence tests (tests/test_maincontent.py) pin this kernel to it.
     """
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
-    if engine == "arrow":
-        return _extract_main_text_arrow(
-            df, id_col, html_col, min_words=min_words,
-            max_link_density=max_link_density,
-            min_stopword_frac=min_stopword_frac, out_col=out_col,
-            keep_columns=keep_columns,
-        )
-    blocks = page_blocks(F.col(html_col))
-    kept = F.filter(
-        blocks,
-        lambda s: (s["words"] >= F.lit(min_words))
-        & (
-            s["anchor_words"].cast("double")
-            <= F.lit(float(max_link_density)) * s["words"].cast("double")
-        )
-        & (
-            s["stop_words"].cast("double")
-            >= F.lit(float(min_stopword_frac)) * s["words"].cast("double")
-        ),
-    )
-    main = F.array_join(F.transform(kept, lambda s: s["text"]), "\n")
-    cols = [id_col] + list(keep_columns or [])
-    return df.select(
-        *cols,
-        main.alias(out_col),
-        F.size(F.filter(blocks, lambda s: s["words"] >= 1))
-        .cast("long")
-        .alias("n_blocks"),
-        F.size(kept).cast("long").alias("n_kept"),
-        _word_count(main).cast("long").alias("main_words"),
-    )
-
-
-def _extract_main_text_arrow(
-    df: DataFrame,
-    id_col: str,
-    html_col: str,
-    *,
-    min_words: int,
-    max_link_density: float,
-    min_stopword_frac: float,
-    out_col: str,
-    keep_columns: Optional[list],
-) -> DataFrame:
-    """Arrow engine: one mapInPandas pass per page batch.  At 1M raw
-    pages the expression path's per-block higher-order structs cost
-    ~61 s — the module docstring's "tens of blocks per page" estimate
-    underpriced the interpreted struct construction; the kernel does
-    the identical regex work in Python at a fraction of the per-
-    element overhead (same move as sigkernel/LM/weblinks)."""
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType,
     )
@@ -426,9 +378,8 @@ def _extract_main_text_arrow(
             for i in range(len(pdf)):
                 html = htmls.iloc[i]
                 if html is None:
-                    # expression path yields null text / 0 counts?  No:
-                    # regexp on null nulls the whole row's outputs — keep
-                    # the row with nulls to match the expr projection.
+                    # regexp on null nulls every output of the reference
+                    # expression projection — keep the row, all nulls
                     main, nb, nk, mwds = None, None, None, None
                 else:
                     main, nb, nk, mwds = _py_page_main(p, str(html), mw, mld, msf)

@@ -35,17 +35,17 @@ Self-loops (links within ``src_host``) are kept — callers filter them
 when ranking cross-site authority; they carry real signal for
 navigation-template detection.
 
-Scale design: with ``engine="expr"`` extraction and resolution are
-zero-shuffle scan expressions; the default ``engine="arrow"`` kernel
-adds ONE round-robin exchange on large narrow inputs (its
+Scale design: ``outlinks`` / ``resolve_href`` / ``base_href`` are
+zero-shuffle scan expressions.  ``host_link_graph`` runs one Arrow
+kernel that adds ONE round-robin exchange on large narrow inputs (its
 ``rebalance_for_cpu`` widening) and pre-counts (src, dst) pairs per
-batch so less data reaches the aggregation.  Either way the edge
-aggregation is ONE groupBy over (src_host, dst_host) with map-side
-partial aggregation, and the output is host-cardinality (millions),
-not page-cardinality (billions).  The SQL oracle mirrors the expr
-path; the arrow kernel is pinned to it by property/fuzz equivalence
-tests.  Feeds ``operators.graph.pagerank`` / ``degree_stats``
-directly.
+batch so less data reaches the aggregation; the edge aggregation is
+ONE groupBy over (src_host, dst_host) with map-side partial
+aggregation, and the output is host-cardinality (millions), not
+page-cardinality (billions).  The SQL oracle mirrors the expression
+plan, kept as the reference in ``tests/engine_oracles.py``; the kernel
+is pinned to it by property/fuzz equivalence tests.  Feeds
+``operators.graph.pagerank`` / ``degree_stats`` directly.
 
 Documented recall/precision boundaries (real crawls are adversarial):
 
@@ -447,7 +447,6 @@ def host_link_graph(
     html_col: str,
     *,
     page_url_col: "str | None" = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Aggregated host-level edges ``(src_host, dst_host, n_links)``.
 
@@ -460,65 +459,23 @@ def host_link_graph(
     weights are no longer undercounted (pre-r9 behavior dropped every
     relative link).  ``n_links`` counts every href occurrence, so
     parallel edges from one page weight the edge — what PageRank and
-    link-farm heuristics expect.  ONE shuffle (the groupBy), map-side
-    combined.
+    link-farm heuristics expect.
 
-    ``engine="arrow"`` (default) extracts+resolves+canonicalizes in a
-    Python-regex kernel and pre-counts (src, dst) pairs per Arrow
-    batch, so the shuffle input is partial counts, not links.  The r9
-    1M-page probe measured the expression path at 545 s — per-link
-    RFC resolution is ~25 chained regex ops inside interpreted
-    higher-order lambdas, the same constant-factor wall as the MinHash
-    shingle lambdas — and the kernel is property-tested identical to
-    it (``engine="expr"``), incl. the try_parse_url accept/reject
-    boundary pinned empirically.
+    One ``mapInPandas`` pass extracts+resolves+canonicalizes links in a
+    Python-regex kernel and emits per-batch partial ``(src_host,
+    dst_host, n)`` counts; ONE map-side-combined groupBy sums them, so
+    the shuffle carries partial counts (bounded by distinct host pairs
+    per batch), not the raw link stream.  The input is widened with
+    ``rebalance_for_cpu`` first (CPU-bound scan; same guard as the
+    MinHash/LM kernels).  The r9 1M-page probe measured the equivalent
+    expression plan (:func:`resolved_outlinks` + ``canonical_url``) at
+    545 s — per-link RFC resolution is ~25 chained regex ops inside
+    interpreted higher-order lambdas, the same constant-factor wall as
+    the MinHash shingle lambdas.  That plan is kept as the reference in
+    ``tests/engine_oracles.py``, and the kernel is property-tested
+    identical to it, incl. the try_parse_url accept/reject boundary
+    pinned empirically.
     """
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
-    if engine == "arrow":
-        return _host_link_graph_arrow(df, src_host_col, html_col, page_url_col)
-    page_url = (
-        F.col(page_url_col)
-        if page_url_col is not None
-        else F.concat(F.lit("https://"), F.col(src_host_col), F.lit("/"))
-    )
-    # canonical_url output starts with the (lowercased, www-stripped)
-    # host; the first /?# ends it.  A non-default port stays — distinct
-    # origins are distinct graph nodes.
-    dst_host = F.regexp_extract(F.col("__t"), r"^([^/?#]+)", 1)
-    # two-step select: defining an alias named like src_host_col in the
-    # same list that references it would make Spark read the second
-    # reference as a lateral column alias (unsupported with generators)
-    linked = df.select(
-        F.col(src_host_col).alias("__src"),
-        resolved_outlinks(F.col(html_col), page_url).alias("__links"),
-    )
-    exploded = linked.select(
-        F.col("__src").alias("src_host"), F.explode("__links").alias("__raw")
-    ).select(
-        "src_host", canonical_url(F.col("__raw")).alias("__t")
-    ).filter(F.col("__t").isNotNull())
-    return (
-        exploded.select("src_host", dst_host.alias("dst_host"))
-        .filter(F.col("dst_host") != "")
-        .groupBy("src_host", "dst_host")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_links"))
-    )
-
-
-def _host_link_graph_arrow(
-    df: DataFrame,
-    src_host_col: str,
-    html_col: str,
-    page_url_col: "str | None",
-) -> DataFrame:
-    """Arrow engine for :func:`host_link_graph`: one mapInPandas pass
-    emits per-batch partial ``(src_host, dst_host, n)`` counts, then
-    ONE map-side-combined groupBy sums them.  The shuffle carries
-    partial counts (bounded by distinct host pairs per batch), not the
-    raw link stream — strictly less than the expression path moves.
-    The input is widened with ``rebalance_for_cpu`` first (CPU-bound
-    scan; same guard as the MinHash/LM kernels)."""
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType,
     )

@@ -1,13 +1,17 @@
+import pytest
 from pyspark.sql import functions as F
 
 from hermes_spark.operators import (
     duplicate_clusters,
     exact_dedup,
     minhash_lsh_pairs,
+    minhash_signatures,
     ngram_jaccard_pairs,
     simhash_fingerprints,
     simhash_near_dup_pairs,
 )
+
+from engine_oracles import lsh_pairs_expr
 
 
 def docs(spark):
@@ -531,10 +535,20 @@ def _pair_set(df):
     }
 
 
+def _expr_pairs(df, **kwargs):
+    """The expression pair generation over the operator's own
+    signatures (tests/engine_oracles.py)."""
+    sigs = minhash_signatures(
+        df, "doc_id", "text", num_hashes=kwargs.get("num_hashes", 16)
+    )
+    return lsh_pairs_expr(sigs, **kwargs)
+
+
 def test_minhash_pair_engines_bit_identical(spark, documents):
-    """The Arrow pair kernel and the expression path must produce the
-    SAME (id_a, id_b, est_jaccard) set — including the oversized-bucket
-    collapse (forced here with a tiny cap) and the min_jaccard push-down."""
+    """The Arrow pair kernel and the expression reference must produce
+    the SAME (id_a, id_b, est_jaccard) set — including the
+    oversized-bucket collapse (forced here with a tiny cap) and the
+    min_jaccard push-down."""
     corpus = documents.limit(400)
     for kwargs in (
         dict(),  # default: all-pairs path
@@ -542,35 +556,57 @@ def test_minhash_pair_engines_bit_identical(spark, documents):
         dict(min_jaccard=0.5),  # kernel-side prefilter
         dict(max_bucket_size=3, min_jaccard=0.25, num_hashes=32, num_bands=8),
     ):
-        arrow = minhash_lsh_pairs(
-            corpus, "doc_id", "text", pair_engine="arrow", **kwargs
-        )
-        expr = minhash_lsh_pairs(
-            corpus, "doc_id", "text", pair_engine="expr", **kwargs
-        )
+        arrow = minhash_lsh_pairs(corpus, "doc_id", "text", **kwargs)
+        expr = _expr_pairs(corpus, **kwargs)
         assert _pair_set(arrow) == _pair_set(expr), kwargs
 
 
 def test_minhash_pair_engine_string_ids(spark):
     """Non-numeric ids go through the kernel's Python-sort fallback and
-    string least/greatest — must still match the expression path."""
+    string least/greatest — must still match the expression reference."""
     rows = [(f"doc-{i:03d}", f"shared boilerplate text {i % 3}") for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id string, text string")
     arrow = minhash_lsh_pairs(df, "doc_id", "text", max_bucket_size=4)
-    expr = minhash_lsh_pairs(
-        df, "doc_id", "text", max_bucket_size=4, pair_engine="expr"
-    )
+    expr = _expr_pairs(df, max_bucket_size=4)
     assert _pair_set(arrow) == _pair_set(expr)
     assert len(_pair_set(arrow)) > 0
 
 
-def test_minhash_rejects_unknown_engine(spark, documents):
-    import pytest
+def test_bucket_bounds_asserts_alignment():
+    """The pair kernels slice two gathered lists with shared bounds; a
+    bucket whose id and value lists differ in length must fail loudly
+    instead of pairing ids with another row's values."""
+    import pyarrow as pa
 
-    with pytest.raises(ValueError, match="pair_engine"):
-        minhash_lsh_pairs(
-            documents, "doc_id", "text", pair_engine="nope"
-        )
+    from hermes_spark.operators.dedup import _bucket_bounds
+
+    ids = pa.array([[1, 2, 3], [4, 5]], type=pa.list_(pa.int64()))
+    same = pa.array([[7, 8, 9], [6, 5]], type=pa.list_(pa.int64()))
+    assert _bucket_bounds(ids, same) == [(0, 3), (3, 5)]
+    short = pa.array([[7, 8], [6, 5, 4]], type=pa.list_(pa.int64()))
+    with pytest.raises(AssertionError, match="misaligned"):
+        _bucket_bounds(ids, short)
+
+
+@pytest.mark.parametrize("bits", [0, 64, 65])
+def test_simhash_rejects_bits_outside_1_to_63(spark, bits):
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="bits"):
+        simhash_fingerprints(df, "doc_id", "text", bits=bits)
+    with pytest.raises(ValueError, match="bits"):
+        simhash_near_dup_pairs(df, "doc_id", "text", bits=bits)
+
+
+def test_simhash_accepts_63_bits(spark):
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox"), (2, "")], "doc_id long, text string"
+    )
+    got = {
+        r["id"]: r["simhash"]
+        for r in simhash_fingerprints(df, "doc_id", "text", bits=63).collect()
+    }
+    assert 0 <= got[1] < 1 << 63
+    assert got[2] == (1 << 63) - 1  # no tokens: every vote ties -> all set
 
 
 def test_exact_dedup_incremental(spark):

@@ -297,9 +297,10 @@ def test_fingerprint_dedup_against_component_vs_greedy(spark):
 
 def test_fingerprint_pairs_arrow_equals_expr(spark):
     """Property: the arrow in-bucket kernel and the Catalyst expression
-    path emit the IDENTICAL pair set (ids + hamming), including
+    reference emit the IDENTICAL pair set (ids + hamming), including
     negative hashes, dense near-dup clusters and string ids."""
     from hermes_spark.operators.dedup import fingerprint_near_dup_pairs
+    from engine_oracles import fingerprint_near_dup_pairs_expr
 
     rng = np.random.default_rng(11)
 
@@ -319,17 +320,17 @@ def test_fingerprint_pairs_arrow_equals_expr(spark):
     df = spark.createDataFrame(rows, ["id", "fp"])
     for mh in (2, 4):
         a = {tuple(r) for r in fingerprint_near_dup_pairs(
-            df, "id", "fp", max_hamming=mh, engine="arrow").collect()}
-        e = {tuple(r) for r in fingerprint_near_dup_pairs(
-            df, "id", "fp", max_hamming=mh, engine="expr").collect()}
+            df, "id", "fp", max_hamming=mh).collect()}
+        e = {tuple(r) for r in fingerprint_near_dup_pairs_expr(
+            df, "id", "fp", max_hamming=mh).collect()}
         assert a == e, (mh, a ^ e)
     # string ids round-trip through the kernel
     sdf = spark.createDataFrame(
         [(f"doc-{i}", f) for i, f in enumerate(fps)], ["id", "fp"])
     a = {tuple(r) for r in fingerprint_near_dup_pairs(
-        sdf, "id", "fp", max_hamming=3, engine="arrow").collect()}
-    e = {tuple(r) for r in fingerprint_near_dup_pairs(
-        sdf, "id", "fp", max_hamming=3, engine="expr").collect()}
+        sdf, "id", "fp", max_hamming=3).collect()}
+    e = {tuple(r) for r in fingerprint_near_dup_pairs_expr(
+        sdf, "id", "fp", max_hamming=3).collect()}
     assert a == e
 
 
@@ -513,16 +514,19 @@ def test_store_saturation_exact_fallback(spark):
     assert {r["id"] for r in surv2.collect()} == {102}
 
 
-def test_simhash_engine_kwarg_passthrough(spark, documents):
-    """r12c review: simhash_near_dup_pairs exposes engine= so callers
-    can run the pure-Catalyst path for engine-independence checks."""
-    from hermes_spark.operators.dedup import simhash_near_dup_pairs
+def test_simhash_near_dup_pairs_match_expr_pairing(spark, documents):
+    """simhash_near_dup_pairs (numpy in-bucket pairing) equals the
+    pure-Catalyst pairing reference over the same fingerprints."""
+    from hermes_spark.operators.dedup import (
+        simhash_fingerprints,
+        simhash_near_dup_pairs,
+    )
+    from engine_oracles import fingerprint_near_dup_pairs_expr
 
     docs = documents.limit(60)
     a = {tuple(r) for r in simhash_near_dup_pairs(
-        docs, "doc_id", "text", bits=32, max_hamming=6,
-        engine="arrow").collect()}
-    e = {tuple(r) for r in simhash_near_dup_pairs(
-        docs, "doc_id", "text", bits=32, max_hamming=6,
-        engine="expr").collect()}
+        docs, "doc_id", "text", bits=32, max_hamming=6).collect()}
+    e = {tuple(r) for r in fingerprint_near_dup_pairs_expr(
+        simhash_fingerprints(docs, "doc_id", "text", bits=32),
+        "id", "simhash", bits=32, max_hamming=6).collect()}
     assert a == e

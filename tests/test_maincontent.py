@@ -7,6 +7,8 @@ from pyspark.sql import functions as F
 from hermes_spark.operators import extract_main_text, main_text_column
 from hermes_spark.plans import count_exchanges, plan_operators
 
+from engine_oracles import extract_main_text_expr
+
 PAGE = (
     '<html><head><title>T</title><style>p { color: red; }</style></head>'
     "<body>"
@@ -109,9 +111,9 @@ def test_zero_shuffle_plan(spark, sf_dir):
 
 
 def test_arrow_matches_expr_messy(spark):
-    """Engine equivalence on adversarial markup: unclosed tags, nested
-    anchors, entity edge order (&amp;lt;), \x0b whitespace, unicode,
-    empty/whitespace pages, case-mixed block tags, null."""
+    """Kernel vs expression reference on adversarial markup: unclosed
+    tags, nested anchors, entity edge order (&amp;lt;), \x0b whitespace,
+    unicode, empty/whitespace pages, case-mixed block tags, null."""
     rows = [
         (1, PAGE),
         (2, None),
@@ -132,8 +134,8 @@ def test_arrow_matches_expr_messy(spark):
         (12, "no block tags at all just a bare text run with the words"),
     ]
     df = _frame(spark, rows)
-    a = extract_main_text(df, "doc_id", "html", engine="arrow").toPandas()
-    e = extract_main_text(df, "doc_id", "html", engine="expr").toPandas()
+    a = extract_main_text(df, "doc_id", "html").toPandas()
+    e = extract_main_text_expr(df, "doc_id", "html").toPandas()
     a = a.sort_values("doc_id").reset_index(drop=True)
     e = e.sort_values("doc_id").reset_index(drop=True)
     assert a.astype(str).equals(e.astype(str))
@@ -165,8 +167,8 @@ def test_arrow_matches_expr_fuzz(spark):
         for i in range(200)
     ]
     df = _frame(spark, rows)
-    a = extract_main_text(df, "doc_id", "html", engine="arrow").toPandas()
-    e = extract_main_text(df, "doc_id", "html", engine="expr").toPandas()
+    a = extract_main_text(df, "doc_id", "html").toPandas()
+    e = extract_main_text_expr(df, "doc_id", "html").toPandas()
     a = a.sort_values("doc_id").reset_index(drop=True)
     e = e.sort_values("doc_id").reset_index(drop=True)
     assert a.astype(str).equals(e.astype(str))

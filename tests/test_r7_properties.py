@@ -5,7 +5,6 @@ monotonicity, dedup retention policy."""
 import re
 from collections import Counter
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -16,6 +15,8 @@ from hermes_spark.operators import (
     exact_dedup,
     gopher_repetition_flags,
 )
+
+from engine_oracles import gopher_repetition_flags_vector
 
 _settings = settings(
     max_examples=8,
@@ -152,20 +153,18 @@ def test_dedup_keep_by_is_argmax_then_min_id(spark, quals):
 @given(texts=st.lists(_doc, min_size=1, max_size=6))
 @_settings
 def test_repetition_engines_bit_identical(spark, texts):
-    """The r8 vectorized gram kernel must equal the retained Counter
-    kernel on every column, bit for bit."""
+    """The r8 vectorized gram kernel (the reference) must equal the
+    Counter kernel on every column, bit for bit."""
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     vec = {
         r.doc_id: r.asDict()
-        for r in gopher_repetition_flags(
-            df, "doc_id", "text", engine="vector"
+        for r in gopher_repetition_flags_vector(
+            df, "doc_id", "text"
         ).collect()
     }
     cnt = {
         r.doc_id: r.asDict()
-        for r in gopher_repetition_flags(
-            df, "doc_id", "text", engine="counter"
-        ).collect()
+        for r in gopher_repetition_flags(df, "doc_id", "text").collect()
     }
     assert vec == cnt
 
@@ -177,18 +176,12 @@ def test_repetition_engines_ambiguous_topgram_tie(spark):
     exactly as the Counter path computes it."""
     text = "aa bb z1 aa bb z2 c dd z3 c dd"
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    vec = gopher_repetition_flags(df, "doc_id", "text", engine="vector").collect()[0]
-    cnt = gopher_repetition_flags(df, "doc_id", "text", engine="counter").collect()[0]
+    vec = gopher_repetition_flags_vector(df, "doc_id", "text").collect()[0]
+    cnt = gopher_repetition_flags(df, "doc_id", "text").collect()[0]
     assert vec.asDict() == cnt.asDict()
     # 2-gram: ('aa','bb') and ('c','dd') both occur 2x; min string is
     # 'aa bb' (len 5): top share = 2*5 / 30 joined chars
     assert abs(vec["top_2gram_char_frac"] - round(10 / 30, 6)) < 1e-9
-
-
-def test_repetition_rejects_unknown_engine(spark):
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="engine"):
-        gopher_repetition_flags(df, "doc_id", "text", engine="nope")
 
 
 def test_bloom_decision_low_sample_defaults_row_bytes(spark, sf_dir):

@@ -349,9 +349,10 @@ def test_repetition_rules_see_cjk_phrases(spark):
     """r12: script-aware repetition rules char-tokenize unsegmented
     docs — a Chinese page looping one phrase now trips the dup-gram
     rules (plain tokenization saw ~1 token and repetition 0).  Latin
-    docs score identically either way, and the counter and vector
-    engines agree on the aware path."""
+    docs score identically either way, and the counter kernel agrees
+    with the vector reference on the aware path."""
     from hermes_spark.operators.gopher import gopher_repetition_flags
+    from engine_oracles import gopher_repetition_flags_vector
 
     looping = "机器学习是人工智能的一个分支。" * 30
     fluent = fluent_paragraph("zh")
@@ -373,9 +374,9 @@ def test_repetition_rules_see_cjk_phrases(spark):
     assert aware[2]["keep"], aware[2]
     # Latin identical either way
     assert plain[3].asDict() == aware[3].asDict()
-    # engines agree on the aware path
-    vec = {r["doc_id"]: r for r in gopher_repetition_flags(
-        df, "doc_id", "text", script_aware=True, engine="vector").collect()}
+    # the vector reference agrees on the aware path
+    vec = {r["doc_id"]: r for r in gopher_repetition_flags_vector(
+        df, "doc_id", "text", script_aware=True).collect()}
     for i in (1, 2, 3):
         assert vec[i].asDict() == aware[i].asDict(), i
 

@@ -90,9 +90,11 @@ def test_hash31_np_portable_all_lengths_incl_multiblock():
 
 
 def test_simhash_vote_engines_identical(spark):
-    """The arrow vote fold must match the expression fold bit-for-bit,
-    including null text, empty/whitespace text, and non-ASCII."""
+    """The arrow vote fold must match the expression fold reference
+    bit-for-bit, including null text, empty/whitespace text, and
+    non-ASCII."""
     from hermes_spark.operators.dedup import simhash_fingerprints
+    from engine_oracles import simhash_fingerprints_expr
 
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
@@ -111,13 +113,13 @@ def test_simhash_vote_engines_identical(spark):
         arrow = {
             r["id"]: r["simhash"]
             for r in simhash_fingerprints(
-                df, "doc_id", "text", portable=portable, engine="arrow"
+                df, "doc_id", "text", portable=portable
             ).collect()
         }
         expr = {
             r["id"]: r["simhash"]
-            for r in simhash_fingerprints(
-                df, "doc_id", "text", portable=portable, engine="expr"
+            for r in simhash_fingerprints_expr(
+                df, "doc_id", "text", portable=portable
             ).collect()
         }
         assert arrow == expr
@@ -125,10 +127,11 @@ def test_simhash_vote_engines_identical(spark):
 
 def test_simhash_vote_engines_identical_real_corpus(spark):
     from hermes_spark.operators.dedup import simhash_fingerprints
+    from engine_oracles import simhash_fingerprints_expr
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = simhash_fingerprints(docs, "doc_id", "text", engine="arrow")
-    e = simhash_fingerprints(docs, "doc_id", "text", engine="expr")
+    a = simhash_fingerprints(docs, "doc_id", "text")
+    e = simhash_fingerprints_expr(docs, "doc_id", "text")
     assert a.exceptAll(e).count() == 0 and e.exceptAll(a).count() == 0
 
 

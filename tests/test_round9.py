@@ -1,6 +1,7 @@
 """Round-9 additions: the Arrow MinHash signature kernel's
 bit-identity contract (xxh64 reference vectors, lane consistency,
-kernel-vs-expression signatures) and the oracle-window gate's
+kernel-vs-expression signatures — the expression being the public
+``minhash_signature(shingles(...))``) and the oracle-window gate's
 one-round-only saturation-excuse rule."""
 
 import importlib.util
@@ -11,6 +12,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from hermes_spark.functions.hashing import minhash_signature, shingles
 from hermes_spark.functions.sigkernel import (
     hash31_np,
     signatures_for_texts,
@@ -18,6 +20,17 @@ from hermes_spark.functions.sigkernel import (
     xxh64_np,
 )
 from hermes_spark.operators import minhash_signatures
+
+from engine_oracles import lsh_pairs_expr
+
+
+def _expr_signatures(df, num_hashes=16, portable=True):
+    """The expression reference of ``minhash_signatures`` (n=3)."""
+    return df.select(
+        F.col("doc_id").alias("__id"),
+        minhash_signature(shingles(F.col("text"), n=3), num_hashes, portable)
+        .alias("__sig"),
+    )
 
 # Spark-produced vectors: F.xxhash64(s) (single column, engine default
 # seed 42) — pins the byte-level XXH64 including the <32-byte tail, the
@@ -120,16 +133,12 @@ def test_kernel_matches_expression_signatures(spark, portable):
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
     e = {
         r["__id"]: r["__sig"]
-        for r in minhash_signatures(
-            df, "doc_id", "text", num_hashes=16, portable=portable,
-            sig_engine="expr",
-        ).collect()
+        for r in _expr_signatures(df, 16, portable).collect()
     }
     a = {
         r["__id"]: r["__sig"]
         for r in minhash_signatures(
             df, "doc_id", "text", num_hashes=16, portable=portable,
-            sig_engine="arrow",
         ).collect()
     }
     assert e == a
@@ -140,17 +149,22 @@ def test_minhash_pairs_engines_identical(spark):
         (i, ("the quick brown fox %d " % (i % 7)) * 6) for i in range(60)
     ]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    frames = {}
     from hermes_spark.operators import minhash_lsh_pairs
 
-    for sig_engine in ("expr", "arrow"):
-        got = minhash_lsh_pairs(
+    got = {
+        "arrow": minhash_lsh_pairs(
             df, "doc_id", "text", num_hashes=16, num_bands=4,
-            min_jaccard=0.5, sig_engine=sig_engine,
-        )
-        frames[sig_engine] = sorted(
-            (r["id_a"], r["id_b"], r["est_jaccard"]) for r in got.collect()
-        )
+            min_jaccard=0.5,
+        ),
+        "expr": lsh_pairs_expr(
+            _expr_signatures(df, 16), num_hashes=16, num_bands=4,
+            min_jaccard=0.5,
+        ),
+    }
+    frames = {
+        k: sorted((r["id_a"], r["id_b"], r["est_jaccard"]) for r in v.collect())
+        for k, v in got.items()
+    }
     assert frames["expr"] == frames["arrow"]
     assert len(frames["expr"]) > 0
 

@@ -8,6 +8,8 @@ from hermes_spark.operators import extract_outlinks, host_link_graph, outlinks
 from hermes_spark.operators.weblinks import base_href, resolve_href
 from hermes_spark.plans import count_exchanges
 
+from engine_oracles import host_link_graph_expr
+
 PAGE = (
     '<html><body>'
     '<a href="https://www.Example.COM/a/?utm_source=x&z=1&b=2">one</a>'
@@ -257,14 +259,14 @@ def test_host_graph_arrow_matches_expr(spark):
     for kwargs in ({}, {"page_url_col": "page_url"}):
         expr = {
             (r["src_host"], r["dst_host"]): r["n_links"]
-            for r in host_link_graph(
-                df, "src_host", "html", engine="expr", **kwargs
+            for r in host_link_graph_expr(
+                df, "src_host", "html", **kwargs
             ).collect()
         }
         arrow = {
             (r["src_host"], r["dst_host"]): r["n_links"]
             for r in host_link_graph(
-                df, "src_host", "html", engine="arrow", **kwargs
+                df, "src_host", "html", **kwargs
             ).collect()
         }
         assert arrow == expr, (kwargs, arrow, expr)
@@ -272,8 +274,8 @@ def test_host_graph_arrow_matches_expr(spark):
 
 
 def test_host_graph_arrow_matches_expr_fuzz(spark):
-    """Random pages assembled from href-shaped fragments — both engines
-    must agree edge-for-edge."""
+    """Random pages assembled from href-shaped fragments — the kernel
+    must agree with the expression reference edge-for-edge."""
     import random
 
     rng = random.Random(77)
@@ -299,10 +301,10 @@ def test_host_graph_arrow_matches_expr_fuzz(spark):
         rows, "doc_id long, src_host string, page_url string, html string"
     )
     for kwargs in ({}, {"page_url_col": "page_url"}):
-        expr = sorted(map(tuple, host_link_graph(
-            df, "src_host", "html", engine="expr", **kwargs).collect()))
+        expr = sorted(map(tuple, host_link_graph_expr(
+            df, "src_host", "html", **kwargs).collect()))
         arrow = sorted(map(tuple, host_link_graph(
-            df, "src_host", "html", engine="arrow", **kwargs).collect()))
+            df, "src_host", "html", **kwargs).collect()))
         assert arrow == expr, kwargs
 
 
@@ -349,9 +351,9 @@ def test_host_graph_arrow_matches_expr_hostile_fuzz(spark):
         rows, "doc_id long, src_host string, page_url string, html string"
     )
     for kwargs in ({}, {"page_url_col": "page_url"}):
-        expr = sorted(map(tuple, host_link_graph(
-            df, "src_host", "html", engine="expr", **kwargs).collect()))
+        expr = sorted(map(tuple, host_link_graph_expr(
+            df, "src_host", "html", **kwargs).collect()))
         arrow = sorted(map(tuple, host_link_graph(
-            df, "src_host", "html", engine="arrow", **kwargs).collect()))
+            df, "src_host", "html", **kwargs).collect()))
         assert arrow == expr, kwargs
         assert expr  # traps must not have swallowed everything

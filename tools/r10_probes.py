@@ -12,8 +12,6 @@
 * ``sig_nonascii``    — MinHash signature throughput on a non-ASCII
   (Cyrillic-mapped) 1M-doc corpus vs the same-shape ASCII corpus
   (VERDICT r9 item 4: exercises the round-10 codepoint lane).
-* ``maincontent_rich`` — extract_main_text on realistic ~49-block
-  pages, both engines (VERDICT r9 item 7).
 * ``stream_wet_1m``   — the streaming raw-WARC path at 1M pages:
   drop-zone WET shards through ``curated_wet_stream`` in 50-shard
   micro-batches; per-batch walls + checkpoint footprint (VERDICT r9
@@ -213,106 +211,6 @@ def probe_sig_nonascii(spark) -> None:
             out({"probe": "sig_nonascii", "variant": variant, "docs": n,
                  "pairs": n_pairs, "wall": wall,
                  "docs_per_s": round(n / wall)})
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def probe_maincontent_rich(spark) -> None:
-    """extract_main_text on REALISTIC many-block pages (VERDICT r9
-    item 7: the r8/r9 one-paragraph shell underweights per-block cost,
-    and main-content extraction now bounds raw-crawl ingestion).  Each
-    page: nav list, sidebar link farm, ~30 content paragraphs cut from
-    the zipf text, pull-quote/related-links chrome every few
-    paragraphs, footer, script/style/comment noise — ~40 blocks/page.
-    Both engines measured on the same written corpus."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from hermes_spark.operators import extract_main_text
-    from hermes_spark.synth import zipf_documents
-
-    n = int(os.environ.get("MC_DOCS", "200000"))
-    work = f"/tmp/r10_mcrich_{n}"
-
-    def build_page(doc_id: int, text: str) -> str:
-        rng = random.Random(doc_id)
-        words = text.split()
-        paras = [
-            " ".join(words[i:i + 25]) for i in range(0, len(words), 25)
-        ] or [text]
-        while len(paras) < 30:
-            paras = paras + paras
-        paras = paras[:30]
-        parts = [
-            "<html><head><title>t</title><style>p{margin:0}</style></head>",
-            "<body><nav><ul>",
-            "".join(
-                f'<li><a href="/s{i}">Section {i} name</a></li>'
-                for i in range(8)
-            ),
-            "</ul></nav>",
-            '<aside><div class="widget">',
-            "".join(
-                f'<a href="/rel{i}">Related article number {i}</a> '
-                for i in range(10)
-            ),
-            "</div></aside><article>",
-        ]
-        for j, para in enumerate(paras):
-            parts.append(f"<p>{para}</p>")
-            if j % 7 == 3:
-                parts.append(
-                    f'<blockquote>{" ".join(para.split()[:6])}</blockquote>'
-                )
-            if j % 9 == 5:
-                parts.append(
-                    '<div class="inline-promo"><a href="/sub">Subscribe '
-                    'to the newsletter today</a></div>'
-                )
-            if rng.random() < 0.2:
-                parts.append("<!-- ad slot -->")
-        parts.append(
-            "</article><footer><div>"
-            + "".join(
-                f'<a href="/f{i}">Footer link {i}</a> ' for i in range(12)
-            )
-            + "</div><p>(c) 2026 Example Corp. All rights reserved. "
-            "Contact the team for licensing.</p></footer>"
-            "<script>var analytics = {id: 1};</script></body></html>"
-        )
-        return "".join(parts)
-
-    if not os.path.exists(f"{work}/raw/_SUCCESS"):
-        synth = zipf_documents(
-            spark, n, vocab_size=30_000, doc_len=800, seed=23,
-            partitions=128,
-        )
-        build_udf = F.udf(build_page)
-        synth.select(
-            "doc_id", build_udf("doc_id", "text").alias("html")
-        ).write.mode("overwrite").parquet(f"{work}/raw")
-    pages = spark.read.parquet(f"{work}/raw")
-    pages.count()
-    try:
-        for engine in ("expr", "arrow"):
-            t0 = time.time()
-            extracted = extract_main_text(
-                pages, "doc_id", "html", engine=engine
-            )
-            agg = extracted.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("n_blocks").alias("blocks"),
-                F.sum("n_kept").alias("kept"),
-                F.sum("main_words").alias("words"),
-            ).collect()[0]
-            wall = time.time() - t0
-            out({"probe": "maincontent_rich", "engine": engine,
-                 "docs": int(agg["n"]),
-                 "blocks_per_page": round(agg["blocks"] / agg["n"], 1),
-                 "kept_blocks": int(agg["kept"]),
-                 "words": int(agg["words"]), "wall": round(wall, 1),
-                 "docs_per_s": round(agg["n"] / wall)})
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -592,7 +490,6 @@ PROBES = {
     "lm_decomp": probe_lm_decomp,
     "repetition_ab": probe_repetition_ab,
     "sig_nonascii": probe_sig_nonascii,
-    "maincontent_rich": probe_maincontent_rich,
     "stream_wet_1m": probe_stream_wet_1m,
     "stream_dedup_1m": probe_stream_dedup_1m,
 }

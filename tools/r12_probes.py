@@ -215,7 +215,7 @@ def probe_stream_minhash_decomp(spark) -> None:
     t0 = time.time()
     sigs = minhash_signatures(
         late, "doc_id", "text", shingle_n=3, num_hashes=num_hashes,
-        portable=True, sig_engine="arrow",
+        portable=True,
     )
     banded = sigs.select(
         "__id", "__sig",

@@ -1,13 +1,9 @@
 """Round-8 scale probes (VERDICT r7 items 1, 6, 7, 8).
 
-Usage: python tools/r8_probes.py [probe ...]   (default: minhash_1m)
+Usage: python tools/r8_probes.py [probe ...]   (default: funnel_5m)
 
 Probes — each prints one JSON line per result:
 
-* ``minhash_1m``   — MinHash near-dup stage at 1M Zipf docs, Arrow pair
-  kernel vs the expression path (the r7 verdict's single perf-weak:
-  banded pair generation was 82% of the 5M-doc funnel wall).  Funnel
-  parameters (32 hashes / 4 bands, min_jaccard 0.7, xxhash).
 * ``funnel_5m``    — the composed curation funnel re-run at 5M docs on
   the r8 stages: clean -> C4 -> Gopher gate -> Gopher repetition gate ->
   exact dedup (keep_by) -> MinHash near-dup (arrow kernel, keep_by
@@ -53,36 +49,6 @@ def get_spark():
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def probe_minhash_1m(spark) -> None:
-    """Arrow vs expression pair generation on the funnel's corpus shape."""
-    from pyspark.sql import functions as F
-
-    from hermes_spark.operators import minhash_lsh_pairs
-    from hermes_spark.synth import zipf_documents
-
-    n = int(os.environ.get("MINHASH_DOCS", "1000000"))
-    work = "/tmp/r8_minhash1m"
-    synth = zipf_documents(
-        spark, n, vocab_size=30_000, doc_len=80, seed=23,
-        near_dup_every=50, partitions=128,
-    ).select("doc_id", F.concat(F.col("text"), F.lit(".")).alias("text"))
-    synth.write.mode("overwrite").parquet(f"{work}/raw")
-    docs = spark.read.parquet(f"{work}/raw")
-    docs.count()
-
-    for engine in ("arrow", "expr"):
-        t0 = time.time()
-        pairs = minhash_lsh_pairs(
-            docs, "doc_id", "text", shingle_n=3, num_hashes=32,
-            num_bands=4, min_jaccard=0.7, portable=False,
-            pair_engine=engine,
-        )
-        n_pairs = pairs.count()
-        out({"probe": "minhash_1m", "engine": engine, "docs": n,
-             "pairs": n_pairs, "wall": round(time.time() - t0, 1)})
-    shutil.rmtree(work, ignore_errors=True)
 
 
 def probe_funnel_5m(spark) -> None:
@@ -222,34 +188,6 @@ def probe_funnel_5m(spark) -> None:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def probe_repetition_1m(spark) -> None:
-    """Vector vs Counter gram kernels at 1M docs (VERDICT r7 item 7:
-    done = >=2x, bit-identical flags)."""
-    from pyspark.sql import functions as F
-
-    from hermes_spark.operators import gopher_repetition_flags
-    from hermes_spark.synth import zipf_documents
-
-    n = int(os.environ.get("REP_DOCS", "1000000"))
-    work = "/tmp/r8_rep1m"
-    synth = zipf_documents(
-        spark, n, vocab_size=30_000, doc_len=80, seed=23,
-        near_dup_every=50, partitions=128,
-    ).select("doc_id", F.concat(F.col("text"), F.lit(".")).alias("text"))
-    synth.write.mode("overwrite").parquet(f"{work}/raw")
-    docs = spark.read.parquet(f"{work}/raw")
-    docs.count()
-    keeps = {}
-    for engine in ("counter", "vector"):
-        t0 = time.time()
-        flags = gopher_repetition_flags(docs, "doc_id", "text", engine=engine)
-        keeps[engine] = flags.filter(F.col("keep")).count()
-        out({"probe": "repetition_1m", "engine": engine, "docs": n,
-             "keeps": keeps[engine], "wall": round(time.time() - t0, 1)})
-    assert keeps["counter"] == keeps["vector"], keeps
-    shutil.rmtree(work, ignore_errors=True)
-
-
 def probe_bloom_sampled_60m(spark) -> None:
     """Cost of bloom_join_decision's SAMPLED mode at 60M rows (VERDICT
     r7 item 8: the CMS mode is measured; tabulate the sampled-bitmap
@@ -284,62 +222,14 @@ def probe_bloom_sampled_60m(spark) -> None:
     shutil.rmtree(work, ignore_errors=True)
 
 
-def probe_maincontent_1m(spark) -> None:
-    """extract_main_text throughput at 1M HTML-wrapped docs (round 8:
-    the crawl-ingestion stage ahead of the C4/Gopher gates)."""
-    from pyspark.sql import functions as F
-
-    from hermes_spark.operators import extract_main_text
-    from hermes_spark.synth import zipf_documents
-
-    n = int(os.environ.get("MC_DOCS", "1000000"))
-    work = "/tmp/r8_mc1m"
-    pre = (
-        '<html><head><style>p{x}</style></head><body>'
-        '<nav><a href="/">Home</a> <a href="/a">About us</a> '
-        '<a href="/c">Contact the sales team</a></nav><h1>Doc</h1><p>'
-    )
-    post = (
-        '</p><div><a href="/p">Privacy policy</a> <a href="/t">Terms</a> '
-        '<a href="/c">Contact</a> legal</div>'
-        "<script>var x=1;</script></body></html>"
-    )
-    synth = zipf_documents(
-        spark, n, vocab_size=30_000, doc_len=80, seed=23, partitions=128
-    ).select(
-        "doc_id",
-        F.concat(F.lit(pre), F.col("text"), F.lit(post)).alias("html"),
-    )
-    synth.write.mode("overwrite").parquet(f"{work}/raw")
-    pages = spark.read.parquet(f"{work}/raw")
-    pages.count()
-    t0 = time.time()
-    engine = os.environ.get("MC_ENGINE", "arrow")
-    extracted = extract_main_text(pages, "doc_id", "html", engine=engine)
-    agg = extracted.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_kept").alias("kept"),
-        F.sum("main_words").alias("words"),
-    ).collect()[0]
-    wall = time.time() - t0
-    out({"probe": "maincontent_1m", "docs": int(agg["n"]),
-         "kept_blocks": int(agg["kept"]), "words": int(agg["words"]),
-         "wall": round(wall, 1),
-         "docs_per_s": round(agg["n"] / wall)})
-    shutil.rmtree(work, ignore_errors=True)
-
-
 PROBES = {
-    "minhash_1m": probe_minhash_1m,
     "funnel_5m": probe_funnel_5m,
-    "repetition_1m": probe_repetition_1m,
     "bloom_sampled_60m": probe_bloom_sampled_60m,
-    "maincontent_1m": probe_maincontent_1m,
 }
 
 
 def main() -> int:
-    names = sys.argv[1:] or ["minhash_1m"]
+    names = sys.argv[1:] or ["funnel_5m"]
     spark = get_spark()
     for name in names:
         PROBES[name](spark)
